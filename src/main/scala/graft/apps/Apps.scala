@@ -1,9 +1,10 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.schemas.Schemas
-import graft.streaming.{StateOps, StatsStreams, WidePipelines}
+import graft.streaming.{StateOps, WidePipelines}
 import graft.util.Det.{decSum, setCount, stamp}
 
 /** The reference's nine dataflow jobs (SURVEY.md §0) as composed Spark
@@ -27,16 +28,14 @@ import graft.util.Det.{decSum, setCount, stamp}
   */
 object Apps {
 
-  // ---- DWM: UniqueVisitApp (UniqueVisitApp.java:24-98) -----------------
-
-  /** Per-day first-visit filter over dwd_page_log JSON: keeps only each
-    * mid's first session-entry page view of the day, forwarding the
-    * original log JSON (the reference emits the original record to
-    * dwm_unique_visit). Tie-break id is a payload hash — deterministic
-    * across micro-batch replays (monotonically_increasing_id is not). */
-  def uniqueVisit(spark: SparkSession, pageLog: DataFrame): DataFrame = {
+  /** dwd_page_log JSON as keyed-state visits, the original log JSON
+    * riding along as the payload (the DWM apps forward the original
+    * record, like the reference). Tie-break id is a payload hash —
+    * deterministic across micro-batch replays (monotonically_increasing_id
+    * is not). */
+  private def pageVisits(spark: SparkSession, pageLog: DataFrame): Dataset[StateOps.Visit] = {
     import spark.implicits._
-    val visits = pageLog
+    pageLog
       .select(from_json(col("value"), Schemas.behaviorLog).as("log"), col("value"))
       .filter(col("log").isNotNull)
       .select(col("log.common.mid").as("mid"), col("log.ts").as("ts"),
@@ -45,42 +44,50 @@ object Apps {
         xxhash64(col("value")).as("eventId"),
         col("value").as("payload"))
       .as[StateOps.Visit]
-    StateOps.uvDedup(visits, sessionEntryOnly = true).toDF()
-      .withColumnRenamed("payload", "value")
   }
+
+  /** A fact topic's JSON bound to its bean schema. DbSplit forwards the
+    * CDC `data` map as strings, so each field is read as a string and
+    * then `try_cast` to its bean type: quoted and bare numbers bind
+    * alike, and a malformed value stays null (as `from_json` gives)
+    * instead of failing the batch under ANSI mode. */
+  private def bindFact(raw: DataFrame, schema: StructType): DataFrame = {
+    val strings = StructType(schema.fields.map(_.copy(dataType = StringType)))
+    raw.select(from_json(col("value"), strings).as("f"))
+      .filter(col("f").isNotNull)
+      .select(schema.fields.toSeq.map(f =>
+        col(s"f.${f.name}").try_cast(f.dataType).as(f.name)): _*)
+  }
+
+  // ---- DWM: UniqueVisitApp (UniqueVisitApp.java:24-98) -----------------
+
+  /** Per-day first-visit filter over dwd_page_log JSON: keeps only each
+    * mid's first session-entry page view of the day, forwarding the
+    * original log JSON to dwm_unique_visit. */
+  def uniqueVisit(spark: SparkSession, pageLog: DataFrame): DataFrame =
+    StateOps.uvDedup(pageVisits(spark, pageLog), sessionEntryOnly = true).toDF()
+      .withColumnRenamed("payload", "value")
 
   // ---- DWM: UserJumpDetailApp (UserJumpDetailApp.java:30-132) ----------
 
   /** Bounce sessions over dwd_page_log JSON (10s CEP window), forwarding
     * the original record like the reference's dwm_user_jump_detail. */
-  def userJump(spark: SparkSession, pageLog: DataFrame): DataFrame = {
-    import spark.implicits._
-    val visits = pageLog
-      .select(from_json(col("value"), Schemas.behaviorLog).as("log"), col("value"))
-      .filter(col("log").isNotNull)
-      .select(col("log.common.mid").as("mid"), col("log.ts").as("ts"),
-        col("log.common.is_new").as("isNew"),
-        col("log.page.last_page_id").as("lastPageId"),
-        xxhash64(col("value")).as("eventId"),
-        col("value").as("payload"))
-      .as[StateOps.Visit]
-    StateOps.bounceDetect(visits, gapMs = 10000L, watermarkDelay = "2 seconds").toDF()
+  def userJump(spark: SparkSession, pageLog: DataFrame): DataFrame =
+    StateOps.bounceDetect(pageVisits(spark, pageLog), gapMs = 10000L,
+      watermarkDelay = "2 seconds").toDF()
       .withColumnRenamed("payload", "value")
-  }
 
   // ---- DWM: OrderWideApp (OrderWideApp.java:32-237) --------------------
 
   /** Bean binding + derived date/hour/epoch columns (P3). */
   def bindOrderInfo(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value"), Schemas.orderInfo).as("o"))
-      .filter(col("o").isNotNull).select("o.*")
+    bindFact(raw, Schemas.orderInfo)
       .withColumn("create_date", to_date(col("create_time")))
       .withColumn("create_hour", hour(col("create_time")))
       .withColumn("create_et", to_timestamp(col("create_time")))
 
   def bindOrderDetail(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value"), Schemas.orderDetail).as("d"))
-      .filter(col("d").isNotNull).select("d.*")
+    bindFact(raw, Schemas.orderDetail)
       .withColumn("create_et", to_timestamp(col("create_time")))
 
   /** Interval join ±5s on event time (J1) + six broadcast dim hops (J3).
@@ -104,9 +111,7 @@ object Apps {
     * bound; its -15 ms literal is a documented upstream bug,
     * SURVEY.md §7.4.3). `orderWide` rows must carry order_id + o_et. */
   def paymentWide(payment: DataFrame, orderWide: DataFrame): DataFrame = {
-    val p = payment
-      .select(from_json(col("value"), Schemas.paymentInfo).as("p"))
-      .filter(col("p").isNotNull).select("p.*")
+    val p = bindFact(payment, Schemas.paymentInfo)
       .withColumn("p_et", to_timestamp(col("create_time")))
       .withColumnRenamed("id", "payment_id")
       .withColumnRenamed("order_id", "p_order_id")
@@ -192,26 +197,22 @@ object Apps {
       logs.select(col("log"), explode(col("log.displays")).as("d"))
         .filter(col("d.item_type") === "sku_id"))
     def skuAction(raw: DataFrame, measure: String) =
-      sparseProduct(col("a.sku_id"), to_timestamp(col("a.create_time")),
-        Map(measure -> lit(1.0)))(
-        raw.select(from_json(col("value"), Schemas.skuAction).as("a"))
-          .filter(col("a").isNotNull))
+      sparseProduct(col("sku_id"), to_timestamp(col("create_time")),
+        Map(measure -> lit(1.0)))(bindFact(raw, Schemas.skuAction))
     val carts = skuAction(cart, "cart_ct")
     val favors = skuAction(favor, "favor_ct")
     val orders = sparseProduct(col("sku_id"), col("o_et"),
       Map("order_amount" -> col("split_total_amount").cast("double")))(orderWide)
     val payments = sparseProduct(col("sku_id"), col("p_et"),
       Map("payment_amount" -> col("split_total_amount").cast("double")))(paymentWide)
-    val refunds = sparseProduct(col("r.sku_id"), to_timestamp(col("r.create_time")),
-      Map("refund_amount" -> col("r.refund_amount").cast("double")))(
-      refund.select(from_json(col("value"), Schemas.refundInfo).as("r"))
-        .filter(col("r").isNotNull))
-    val comments = sparseProduct(col("c.sku_id"), to_timestamp(col("c.create_time")),
+    val refunds = sparseProduct(col("sku_id"), to_timestamp(col("create_time")),
+      Map("refund_amount" -> col("refund_amount").cast("double")))(
+      bindFact(refund, Schemas.refundInfo))
+    val comments = sparseProduct(col("sku_id"), to_timestamp(col("create_time")),
       Map("comment_ct" -> lit(1.0),
         "good_comment_ct" ->
-          when(col("c.appraise") === graft.Constants.AppraiseGood, 1.0).otherwise(0.0)))(
-      comment.select(from_json(col("value"), Schemas.commentInfo).as("c"))
-        .filter(col("c").isNotNull))
+          when(col("appraise") === graft.Constants.AppraiseGood, 1.0).otherwise(0.0)))(
+      bindFact(comment, Schemas.commentInfo))
     Seq(clicks, displays, carts, favors, orders, payments, refunds, comments)
       .reduce(_ unionByName _)
       .withWatermark("et", watermark)

@@ -434,7 +434,7 @@ object Similarity {
     * Each generation is an EAGER LOCAL CHECKPOINT — plan and RDD
     * lineage stay depth-1 however large k gets (a persist chain would
     * nest k generations of lineage and overflow the task-serializer
-    * stack around k ≈ 100 — measured in tools/CoresetProbe), and
+    * stack around k ≈ 100 — measured in round 15, SCALE.md), and
     * exactly one generation's blocks live at any instant (the previous
     * one is released as soon as the next materializes). The re-fold
     * form is kept as [[kCenterSelectLiteral]] — the trace oracle this

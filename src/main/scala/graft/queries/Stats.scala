@@ -11,8 +11,8 @@ import graft.util.Det._
   * All are event-time tumbling windows over `events` / `orders` like the
   * reference's 10s TUMBLE jobs (ProductStatsApp/VisitorStatsApp/
   * KeywordStatsApp/ProvinceStatsSqlApp). Batch rendering here (the
-  * correctness gate is batch); the streaming rendering with watermarks is
-  * graft.streaming.StatsStreams, spec-tested to agree with these.
+  * correctness gate is batch); the streaming renderings with watermarks
+  * are the DWS apps in graft.apps.Apps.
   *
   * Scale notes: every query is a single hash-aggregate after a scan —
   * partial aggregation map-side, one shuffle on the (bounded) group key.

@@ -149,6 +149,12 @@ object CrawlStore {
     }
   }
 
+  private def hasParquetPart(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir).exists { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }
+
   /** Epoch bloom blobs + (if compacted) the compacted-tier blob, IF
     * they cover the full history; None disarms the prefilter. Blobs
     * are preferred as raw `bf.bin` files read driver-side (zero Spark
@@ -164,16 +170,17 @@ object CrawlStore {
       val raw = new Path(s"${path}_bloom/batch_id=$e", "bf.bin")
       if (fs.exists(raw)) Some(e -> readSmall(fs, raw)) else None
     }.toMap
+    // an epoch without bf.bin is covered only by a legacy parquet part:
+    // a crash inside writeRawBlob (after mkdirs, before the rename)
+    // leaves an epoch dir with no blob, which a parquet read throws on
     val needPq = live -- rawByEpoch.keySet
-    if (needPq.nonEmpty) {
-      val haveBlobs = listEpochs(fs, s"${path}_bloom").toSet
-      if (!needPq.subsetOf(haveBlobs)) return None
-    }
+    if (!needPq.forall(e => hasParquetPart(fs, new Path(s"${path}_bloom/batch_id=$e"))))
+      return None
     val compBlob: Option[Array[Byte]] = meta.map { m =>
       val p = s"${vDir(path, m.version)}/bloom"
       val raw = new Path(p, "bf.bin")
       if (fs.exists(raw)) readSmall(fs, raw)
-      else if (fs.exists(new Path(p)))
+      else if (hasParquetPart(fs, new Path(p)))
         spark.read.parquet(p).head().getAs[Array[Byte]]("bf")
       else return None
     }

@@ -29,19 +29,6 @@ object LogFanOut {
     (clean, dirty)
   }
 
-  /** ST1 is_new correction, declarative batch form: a claimed-new record
-    * is confirmed only if it is the mid's first record (streaming form:
-    * StateOps.fixIsNew). */
-  def fixIsNewBatch(clean: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("common.mid")).orderBy(col("ts"))
-    clean.withColumn("rn", row_number().over(w))
-      .withColumn("common", col("common").withField("is_new",
-        when(col("common.is_new") === "1" && col("rn") > 1, "0")
-          .otherwise(col("common.is_new"))))
-      .drop("rn")
-  }
-
   /** Start-log split (BaseLogApp.java:103-106): records with a start
     * payload. */
   def startLog(clean: DataFrame): DataFrame =
@@ -64,40 +51,11 @@ object LogFanOut {
       .filter(col("page").isNotNull)
       .select(to_json(struct(col("common"), col("page"), col("displays"), col("ts"))).as("value"))
 
-  /** Full streaming topology: one source read per micro-batch, persisted,
-    * four sinks (dirty/start/display/page) — the side-output pattern.
-    * is_new correction is per-batch here; `runWithState` carries it
-    * across batches. */
-  def run(spark: SparkSession, source: Channel,
-          sinks: Map[String, DataFrame => Unit],
-          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = source.readStream(spark)
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          val (clean0, dirty) = parse(batch)
-          val clean = fixIsNewBatch(clean0)
-          clean.persist()
-          try {
-            sinks.get("dirty").foreach(_(dirty))
-            sinks.get("start").foreach(_(startLog(clean)))
-            sinks.get("display").foreach(_(displayLog(clean)))
-            sinks.get("page").foreach(_(pageLog(clean)))
-          } finally clean.unpersist()
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
-  }
-
   /** Fan-out with CROSS-BATCH is_new state (the reference's persistent
     * ValueState, BaseLogApp.java:69-94): the stateful correction runs
     * upstream of foreachBatch inside the same streaming query, so a mid
     * seen in batch 1 is returning in batch 5. Dirty rows are dropped here
-    * (route them via `run` when a quarantine sink is needed: Spark allows
-    * only one stateful operator chain per query). */
+    * (`parse` returns them when a quarantine sink is needed). */
   def runWithState(spark: SparkSession, source: Channel,
                    sinks: Map[String, DataFrame => Unit],
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {

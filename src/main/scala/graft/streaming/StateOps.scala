@@ -59,60 +59,29 @@ object StateOps {
       })
   }
 
-  /** ST1 (BaseLogApp.java:69-94): first-ever event per mid keeps
-    * is_new=1; every later event is rewritten to 0. State: seen flag. */
-  def fixIsNew(visits: Dataset[Visit]): Dataset[VisitOut] = {
+  /** ST2 (UniqueVisitApp.java:45-87): keep only the first visit of each
+    * (mid, day); state = last emitted visit date. The dedup semantic is
+    * the stored-date comparison alone; the reference's 24h
+    * OnCreateAndWrite TTL (UniqueVisitApp.java:55-59) only bounds state
+    * size, and a timeout would make Spark re-trigger empty batches on
+    * every timer, so the state has none. */
+  def uvDedup(visits: Dataset[Visit], sessionEntryOnly: Boolean = false): Dataset[VisitOut] = {
     import visits.sparkSession.implicits._
     visits.groupByKey(_.mid).flatMapGroupsWithState(
       OutputMode.Append, GroupStateTimeout.NoTimeout)(
-      (mid: String, rows: Iterator[Visit], state: GroupState[Boolean]) => {
-        val sorted = rows.toSeq.sortBy(v => (v.ts, v.eventId))
-        val out = scala.collection.mutable.ArrayBuffer.empty[VisitOut]
-        var seen = state.getOption.getOrElse(false)
-        sorted.foreach { v =>
-          out += VisitOut(mid, v.ts, if (seen) "0" else "1", v.eventId, v.payload)
-          seen = true
-        }
-        state.update(seen)
-        out.iterator
-      })
-  }
-
-  /** ST2 (UniqueVisitApp.java:45-87): keep only the first visit of each
-    * (mid, day); state = last emitted visit date, which expires naturally
-    * at the day boundary (the reference's 24h OnCreateAndWrite TTL bounds
-    * state size; here ProcessingTimeTimeout plays that role). */
-  def uvDedup(visits: Dataset[Visit], sessionEntryOnly: Boolean = false,
-              stateTtl: Boolean = false): Dataset[VisitOut] = {
-    import visits.sparkSession.implicits._
-    // The dedup semantic is the stored-date comparison alone; the
-    // reference's 24h TTL (UniqueVisitApp.java:55-59) only bounds state
-    // size. ProcessingTimeTimeout makes Spark re-trigger empty batches on
-    // every timer, so it is opt-in (production long-running queries), off
-    // for batch/replay/tests.
-    val timeout =
-      if (stateTtl) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    visits.groupByKey(_.mid).flatMapGroupsWithState(
-      OutputMode.Append, timeout)(
       (mid: String, rows: Iterator[Visit], state: GroupState[String]) => {
-        if (!state.hasTimedOut && rows.nonEmpty) {
-          val sorted = rows.toSeq.sortBy(v => (v.ts, v.eventId))
-            .filter(v => !sessionEntryOnly || v.lastPageId.isEmpty)
-          val out = scala.collection.mutable.ArrayBuffer.empty[VisitOut]
-          var lastDate = state.getOption.getOrElse("")
-          sorted.foreach { v =>
-            val d = dayFmt.format(java.time.Instant.ofEpochMilli(v.ts))
-            if (d != lastDate) {
-              out += VisitOut(mid, v.ts, v.isNew, v.eventId, v.payload); lastDate = d
-            }
+        val sorted = rows.toSeq.sortBy(v => (v.ts, v.eventId))
+          .filter(v => !sessionEntryOnly || v.lastPageId.isEmpty)
+        val out = scala.collection.mutable.ArrayBuffer.empty[VisitOut]
+        var lastDate = state.getOption.getOrElse("")
+        sorted.foreach { v =>
+          val d = dayFmt.format(java.time.Instant.ofEpochMilli(v.ts))
+          if (d != lastDate) {
+            out += VisitOut(mid, v.ts, v.isNew, v.eventId, v.payload); lastDate = d
           }
-          state.update(lastDate)
-          if (stateTtl) state.setTimeoutDuration("24 hours")
-          out.iterator
-        } else {
-          state.remove()
-          Iterator.empty
         }
+        state.update(lastDate)
+        out.iterator
       })
   }
 

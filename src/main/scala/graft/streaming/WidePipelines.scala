@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DWM widening — OrderWide/PaymentWide parity (SURVEY.md §3.2):
@@ -61,16 +61,4 @@ object WidePipelines {
       acc.join(broadcast(renamed),
         acc(factKey) === renamed(s"${prefix}id"), "left")
     }
-
-  /** OrderWide over the test tables: orders ⋈ lineitem interval join +
-    * customer/nation/region/part/supplier enrichment — the 100 TB plan:
-    * one shuffle pair for the stream-stream join keyed on order id, zero
-    * shuffles for all dim hops (broadcast). */
-  def orderWide(spark: SparkSession, orders: DataFrame, lineitem: DataFrame,
-                dims: Seq[(String, String, DataFrame)]): DataFrame = {
-    val joined = intervalJoin(
-      orders, lineitem, "o_orderkey", "l_orderkey",
-      "o_orderdate", "l_shipdate", "0 seconds", "60 days")
-    enrich(joined, dims)
-  }
 }

@@ -99,6 +99,28 @@ class AppsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("DbSplit -> OrderInfo: CDC fact strings bind as typed ids and amounts") {
+    import spark.implicits._
+    import graft.streaming.DbSplit
+    // DbSplit forwards the CDC data map as strings: every number quoted
+    val envelopes = Seq(
+      """{"database":"gmall","tableName":"order_info","data":{"id":"101","province_id":"1","user_id":"7","total_amount":"99.50","create_time":"2021-02-25 10:00:00"},"before":{},"type":"insert"}""",
+      // a malformed number binds as null rather than failing the batch
+      """{"database":"gmall","tableName":"order_info","data":{"id":"102","province_id":"2","user_id":"x8","total_amount":"10.00","create_time":"2021-02-25 11:00:00"},"before":{},"type":"insert"}"""
+    ).toDF("value")
+    val config = Seq(("order_info", "insert", "kafka", "dwd_order_info",
+      "id,province_id,user_id,total_amount,create_time", "id", null: String))
+      .toDF("sourceTable", "operateType", "sinkType", "sinkTable", "sinkColumns", "sinkPk",
+        "sinkExtend")
+    val facts = DbSplit.kafkaFacts(DbSplit.route(DbSplit.parse(envelopes), config))
+    assert(facts.select("value").as[String].collect().forall(_.contains("\"id\":\"10")))
+    val rows = Apps.bindOrderInfo(facts.select("value"))
+      .select($"id", $"user_id", $"total_amount".cast("double"), $"create_hour")
+      .as[(Option[Long], Option[Long], Option[Double], Int)].collect().toSet
+    assert(rows == Set((Some(101L), Some(7L), Some(99.5), 10),
+      (Some(102L), None, Some(10.0), 11)))
+  }
+
   test("ProductStatsApp: 7-source union rolls into one sparse stats row per sku/window") {
     import spark.implicits._
     val page = Seq(

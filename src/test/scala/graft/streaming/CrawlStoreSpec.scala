@@ -133,6 +133,31 @@ class CrawlStoreSpec extends SparkSpec {
     assert(gotC == Set("site40.example/p40"), gotC.toString)
   }
 
+  test("crash inside the blob write: an empty epoch bloom dir disarms " +
+       "the prefilter; the next batch and the replay stay exact, and the " +
+       "replay heals the blob") {
+    import spark.implicits._
+    val dir = tmp("crawl_empty_blob") + "/urls"
+    (0 to 2).foreach(e => CrawlStore.appendKeys(dir)(
+      keysDf(e * 10L until e * 10L + 10L), "canon", e))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // epoch 2's keys committed, and its blob write died between mkdirs
+    // and the rename: the epoch's bloom dir exists but holds no blob
+    val blob = new org.apache.hadoop.fs.Path(s"${dir}_bloom/batch_id=2", "bf.bin")
+    fs.delete(blob, false)
+    assert(fs.exists(blob.getParent) && fs.listStatus(blob.getParent).isEmpty)
+    val cands = keysDf(Seq(3L, 13L, 23L, 77L))
+    def newKeys(batchId: Long) = CrawlStore.antiJoinNew(cands, "canon", dir, batchId)
+      .select($"canon").as[String].collect().toSet
+    assert(newKeys(3L) == Set("site77.example/p77"))
+    // the replay of batch 2 excludes its own epoch, then heals the blob
+    assert(newKeys(2L) == Set("site23.example/p23", "site77.example/p77"))
+    CrawlStore.appendKeys(dir)(keysDf(20L until 30L), "canon", 2L)
+    assert(fs.exists(blob))
+    assert(newKeys(3L) == Set("site77.example/p77"))
+  }
+
   test("mixed-layout blobs: raw bf.bin epochs coexist with legacy " +
        "one-row-parquet epochs (raw epoch dir sorting FIRST) — the " +
        "legacy fallback reads only its own epoch dirs, stays armed " +

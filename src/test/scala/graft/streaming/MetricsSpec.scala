@@ -16,16 +16,16 @@ class MetricsSpec extends SparkSpec {
     def t(s: Long) = new java.sql.Timestamp(s * 1000L)
     val ((inputTotal, lateRows), c) = Metrics.collect(spark) {
       val mem = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
-      val df = mem.toDF().toDF("ts", "event_type", "user_id", "value")
-      val q = StatsStreams.productStats(df, watermark = "2 seconds")
+      val df = mem.toDF().toDF("o_et", "province_name", "order_id", "split_total_amount")
+      val q = graft.apps.Apps.provinceStats(df, watermark = "2 seconds")
         .writeStream.format("memory").queryName("mx_out")
         .outputMode(OutputMode.Append).start()
       try {
-        mem.addData((t(5), "click", 1L, 1.0), (t(12), "view", 2L, 2.0))
+        mem.addData((t(5), "beijing", 1L, 1.0), (t(12), "shanghai", 2L, 2.0))
         q.processAllAvailable() // watermark → 10s, window [0,10) closes
-        mem.addData((t(4), "click", 9L, 9.0)) // LATE: below the watermark
+        mem.addData((t(4), "beijing", 9L, 9.0)) // LATE: below the watermark
         q.processAllAvailable()
-        mem.addData((t(60), "view", 3L, 3.0))
+        mem.addData((t(60), "shanghai", 3L, 3.0))
         q.processAllAvailable()
         // 4 INPUT rows in all — the late row still arrives as input,
         // it is dropped by the watermark afterwards (and only there)

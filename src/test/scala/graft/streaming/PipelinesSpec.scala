@@ -35,30 +35,21 @@ class PipelinesSpec extends SparkSpec {
     assert(pages.length == 1 && pages.head.contains("\"page_id\":\"good_detail\""))
   }
 
-  test("LogFanOut: is_new correction rewrites repeat visitors within a batch") {
-    import spark.implicits._
-    val again = goodLog.replace("1700000001000", "1700000005000")
-    val (clean, _) = LogFanOut.parse(Seq(goodLog, again).toDF("value"))
-    val fixed = LogFanOut.fixIsNewBatch(clean)
-    val flags = fixed.select(col("ts"), col("common.is_new")).as[(Long, String)]
-      .collect().sortBy(_._1)
-    assert(flags.toSeq == Seq(1700000001000L -> "1", 1700000005000L -> "0"))
-  }
-
-  test("LogFanOut full streaming topology writes all four sinks once per batch") {
+  test("LogFanOut.runWithState writes the start, display and page sinks once per " +
+       "batch; dirty rows reach none") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("fanout").toString
     Seq(goodLog, startLogLine, dirtyLine).toDF("value").coalesce(1)
       .write.mode("overwrite").text(s"$dir/in")
-    val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
-    val q = LogFanOut.run(spark, FileChannel(s"$dir/in"),
-      Map("dirty" -> (df => counts.put("dirty", df.count()): Unit),
-        "start" -> (df => counts.put("start", df.count()): Unit),
-        "display" -> (df => counts.put("display", df.count()): Unit),
-        "page" -> (df => counts.put("page", df.count()): Unit)),
-      s"$dir/ckpt")
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    def sink(name: String) = (df: org.apache.spark.sql.DataFrame) =>
+      calls.add(name -> df.count()): Unit
+    val q = LogFanOut.runWithState(spark, FileChannel(s"$dir/in"),
+      Seq("start", "display", "page").map(n => n -> sink(n)).toMap, s"$dir/ckpt")
     try q.processAllAvailable() finally q.stop()
-    assert(counts.toMap == Map("dirty" -> 1L, "start" -> 1L, "display" -> 2L, "page" -> 1L))
+    import scala.jdk.CollectionConverters._
+    assert(calls.asScala.toSeq.sorted ==
+      Seq("display" -> 2L, "page" -> 1L, "start" -> 1L), calls.toString)
   }
 
   test("LogFanOut.runWithState: is_new correction persists across micro-batches") {
@@ -138,29 +129,36 @@ class PipelinesSpec extends SparkSpec {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "user_id", "value")
-    val q = StatsStreams.productStats(df, watermark = "2 seconds")
+    val cols = Seq("o_et", "province_name", "order_id", "split_total_amount")
+    val q = graft.apps.Apps.provinceStats(mem.toDF().toDF(cols: _*), watermark = "2 seconds")
       .writeStream.format("memory").queryName("a1out")
       .outputMode(OutputMode.Append).start()
     def t(s: Long) = new java.sql.Timestamp(s * 1000L)
+    val onTime = Seq((t(5), "beijing", 1L, 1.00), (t(7), "beijing", 2L, 2.00),
+      (t(12), "shanghai", 1L, 3.00), (t(25), "beijing", 3L, 4.00))
     try {
-      mem.addData((t(5), "click", 1L, 1.00), (t(7), "click", 2L, 2.00), (t(12), "view", 1L, 3.00))
+      mem.addData(onTime.take(3))
       q.processAllAvailable()
       // watermark now 12-2=10s: window [0,10) closes and emits
-      mem.addData((t(25), "click", 3L, 4.00))
+      mem.addData(onTime(3))
       q.processAllAvailable()
       // late event for the closed [0,10) window: must be dropped
-      mem.addData((t(4), "click", 9L, 99.00))
+      mem.addData((t(4), "beijing", 9L, 99.00))
       q.processAllAvailable()
-      mem.addData((t(60), "view", 4L, 5.00)) // push watermark, close remaining
+      mem.addData((t(60), "shanghai", 4L, 5.00)) // push watermark, close remaining
       q.processAllAvailable()
       val rows = spark.table("a1out")
-        .select("stt", "event_type", "ct", "amount", "user_ct")
-        .as[(String, String, Long, Double, Long)].collect().toSet
-      assert(rows.contains(("1970-01-01 00:00:00", "click", 2L, 3.00, 2L)))
-      assert(!rows.exists { case (stt, et, ct, _, _) =>
-        stt == "1970-01-01 00:00:00" && et == "click" && ct == 3L }) // late row not re-counted
-      assert(rows.contains(("1970-01-01 00:00:10", "view", 1L, 3.00, 1L)))
+        .select("stt", "province_name", "order_amount", "order_count")
+        .as[(String, String, Double, Long)].collect().toSet
+      assert(rows.contains(("1970-01-01 00:00:00", "beijing", 3.00, 2L)))
+      assert(!rows.exists { case (stt, p, _, n) =>
+        stt == "1970-01-01 00:00:00" && p == "beijing" && n == 3L }) // late row not re-counted
+      assert(rows.contains(("1970-01-01 00:00:10", "shanghai", 3.00, 1L)))
+      // every window the watermark closed equals the batch agg of the on-time rows
+      val batch = graft.apps.Apps.provinceStats(onTime.toDF(cols: _*))
+        .select("stt", "province_name", "order_amount", "order_count")
+        .as[(String, String, Double, Long)].collect().toSet
+      assert(rows == batch, s"stream $rows != batch $batch")
     } finally q.stop()
   }
 

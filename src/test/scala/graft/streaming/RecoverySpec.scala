@@ -22,7 +22,7 @@ class RecoverySpec extends SparkSpec {
     def sinks = Map("page" -> ((df: org.apache.spark.sql.DataFrame) =>
       seen ++= df.as[String].collect(): Unit))
 
-    val q1 = LogFanOut.run(spark, FileChannel(s"$dir/in"), sinks, s"$dir/ckpt")
+    val q1 = LogFanOut.runWithState(spark, FileChannel(s"$dir/in"), sinks, s"$dir/ckpt")
     try {
       Files.writeString(Paths.get(s"$dir/in/w1.json"), line.format(1000L))
       q1.processAllAvailable()
@@ -32,13 +32,18 @@ class RecoverySpec extends SparkSpec {
     // while the query is DOWN, more data lands
     Files.writeString(Paths.get(s"$dir/in/w2.json"), line.format(2000L))
 
-    val q2 = LogFanOut.run(spark, FileChannel(s"$dir/in"), sinks, s"$dir/ckpt")
+    val q2 = LogFanOut.runWithState(spark, FileChannel(s"$dir/in"), sinks, s"$dir/ckpt")
     try {
       q2.processAllAvailable()
       // the restarted query must pick up ONLY the missed file
       assert(seen.size == 2, s"expected exactly one new record, saw: $seen")
       assert(seen.count(_.contains("\"ts\":1000")) == 1)
       assert(seen.count(_.contains("\"ts\":2000")) == 1)
+      // the keyed is_new state survived too: m1 claimed is_new=1 on both
+      // sides of the restart, and only the first claim stands
+      assert(seen.find(_.contains("\"ts\":1000")).exists(_.contains("\"is_new\":\"1\"")))
+      assert(seen.find(_.contains("\"ts\":2000")).exists(_.contains("\"is_new\":\"0\"")),
+        s"restored state must correct the repeat claim: $seen")
     } finally q2.stop()
   }
 

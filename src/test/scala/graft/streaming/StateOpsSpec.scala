@@ -15,17 +15,18 @@ class StateOpsSpec extends SparkSpec {
   test("ST1 is_new: first event per mid keeps 1, later events (even in later batches) get 0") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Visit]
-    val q = fixIsNew(mem.toDS()).writeStream
+    val mem = MemoryStream[TaggedVisit]
+    val q = fixIsNewTagged(mem.toDS()).writeStream
       .format("memory").queryName("st1out").outputMode(OutputMode.Append).start()
     try {
-      mem.addData(Visit("m1", 1000L, "1", None, 1), Visit("m1", 2000L, "1", Some("home"), 2),
-        Visit("m2", 1500L, "1", None, 3))
+      // the payload carries the event id through the correction
+      mem.addData(TaggedVisit("m1", 1000L, "1", "1"), TaggedVisit("m1", 2000L, "1", "2"),
+        TaggedVisit("m2", 1500L, "1", "3"))
       q.processAllAvailable()
-      mem.addData(Visit("m1", 9000L, "1", None, 4)) // second batch: state must persist
+      mem.addData(TaggedVisit("m1", 9000L, "1", "4")) // second batch: state must persist
       q.processAllAvailable()
-      val out = spark.table("st1out").as[VisitOut].collect().sortBy(_.eventId)
-      assert(out.map(v => v.eventId -> v.isNew).toSeq ==
+      val out = spark.table("st1out").as[TaggedVisit].collect().sortBy(_.payload)
+      assert(out.map(v => v.payload.toLong -> v.isNew).toSeq ==
         Seq(1L -> "1", 2L -> "0", 3L -> "1", 4L -> "0"))
     } finally q.stop()
   }

@@ -13,24 +13,24 @@ class UnionJoinSpec extends SparkSpec {
   test("U1 streaming: union of independent source streams feeds one windowed agg") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val clicks = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
-    val orders = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
-    val unioned = clicks.toDF().toDF("ts", "event_type", "user_id", "value")
-      .unionByName(orders.toDF().toDF("ts", "event_type", "user_id", "value"))
-    val q = StatsStreams.productStats(unioned, watermark = "0 seconds")
+    val cols = Seq("o_et", "province_name", "order_id", "split_total_amount")
+    val north = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
+    val south = MemoryStream[(java.sql.Timestamp, String, Long, Double)]
+    val unioned = north.toDF().toDF(cols: _*).unionByName(south.toDF().toDF(cols: _*))
+    val q = graft.apps.Apps.provinceStats(unioned, watermark = "0 seconds")
       .writeStream.format("memory").queryName("u1out")
       .outputMode(OutputMode.Append).start()
     def t(s: Long) = new java.sql.Timestamp(s * 1000L)
     try {
-      clicks.addData((t(1), "click", 1L, 1.0), (t(3), "click", 2L, 1.0))
-      orders.addData((t(5), "order", 1L, 10.0))
+      north.addData((t(1), "beijing", 1L, 1.0), (t(3), "beijing", 2L, 1.0))
+      south.addData((t(5), "shanghai", 1L, 10.0))
       q.processAllAvailable()
-      clicks.addData((t(30), "click", 3L, 1.0)) // advance watermark past window [0,10)
+      north.addData((t(30), "beijing", 3L, 1.0)) // advance watermark past window [0,10)
       q.processAllAvailable()
-      val rows = spark.table("u1out").select("stt", "event_type", "ct")
+      val rows = spark.table("u1out").select("stt", "province_name", "order_count")
         .as[(String, String, Long)].collect().toSet
-      assert(rows.contains(("1970-01-01 00:00:00", "click", 2L)))
-      assert(rows.contains(("1970-01-01 00:00:00", "order", 1L)))
+      assert(rows.contains(("1970-01-01 00:00:00", "beijing", 2L)))
+      assert(rows.contains(("1970-01-01 00:00:00", "shanghai", 1L)))
     } finally q.stop()
   }
 
